@@ -3,7 +3,7 @@ and their DuckDB oracles.
 
 ONE definition of the 60-bit md5-prefix hash: Spark side here, SQL
 side `CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)` — the pair every
-portable operator (minhash/simhash portable mode, bottom-k, hash
+portable operator (minhash, simhash, decontamination, bottom-k, hash
 sampling) builds on. Changing the prefix width or encoding in one
 place and not the other would silently de-synchronize operators from
 their oracles, so they all import from here.

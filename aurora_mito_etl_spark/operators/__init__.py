@@ -13,15 +13,15 @@ follow:
   and long multi-query sessions should reclaim eagerly between
   queries (``bench.py`` does: unpersist every persistent RDD after
   each query's sink — measured consistently faster suite passes, see
-  ``tools/ckpt_hygiene.py``).
+  the note above its timed loop).
 
 - AT PRODUCTION SCALE, ``localCheckpoint`` trades lineage for
   executor-loss fragility: the blocks live only on executors, so a
   lost executor kills the query instead of recomputing. The 100 TB
   posture for anything reused ACROSS queries or stages of a pipeline
   is a Parquet-persisted table (tf-idf postings, dedup shingle
-  tables, near-dup survivor sets — see the ``persist_shingles``-style
-  flags and module docstrings); in-query localCheckpoint remains
+  tables, near-dup survivor sets — see the module docstrings);
+  in-query localCheckpoint remains
   correct for intermediates whose recomputation would cost more than
   a retry of the query.
 """

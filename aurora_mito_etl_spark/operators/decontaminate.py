@@ -8,7 +8,7 @@ dropped before training.
 
 Scale posture (the whole point of the operator): the benchmark side
 is small — eval suites are millions of n-grams, not billions — so it
-is distinct-reduced, hashed to a 60/64-bit long, and BROADCAST; the
+is distinct-reduced, hashed to a 60-bit long, and BROADCAST; the
 100 TB corpus side is never shuffled for the probe. Per-document
 shingling fans out Arrow-batched (`shingles_arrow`), the broadcast
 hash join runs map-side, and only the (rare) hit rows shuffle for the
@@ -34,12 +34,10 @@ def _contamination_hits(
     text_col: str,
     id_col: str,
     bench_text_col: str,
-    portable_hash: bool,
 ) -> DataFrame:
     """(id, n_hit_ngrams) for documents sharing >=1 n-gram with bench
     — the broadcast probe both public operators build on. Contains
     ONLY the contaminated ids (clean docs don't appear)."""
-    hash_expr = md5_prefix60 if portable_hash else F.xxhash64
     bench_grams = (
         _spread(bench)
         .select(
@@ -47,7 +45,7 @@ def _contamination_hits(
                 F.array_distinct(shingles_arrow(F.col(bench_text_col), n))
             ).alias("s")
         )
-        .select(hash_expr(F.col("s")).alias("h"))
+        .select(md5_prefix60(F.col("s")).alias("h"))
         .distinct()
     )
     doc_grams = _spread(docs).select(
@@ -55,7 +53,7 @@ def _contamination_hits(
         F.explode(
             F.array_distinct(shingles_arrow(F.col(text_col), n))
         ).alias("s"),
-    ).select(id_col, hash_expr(F.col("s")).alias("h"))
+    ).select(id_col, md5_prefix60(F.col("s")).alias("h"))
     return (
         doc_grams.join(F.broadcast(bench_grams), "h")
         .groupBy(id_col)
@@ -70,7 +68,6 @@ def ngram_contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """One row per input document: ``n_hit_ngrams`` (distinct word
     n-grams shared with `bench`) and the ``contaminated`` verdict.
@@ -81,19 +78,16 @@ def ngram_contamination(
     before the join, so ``n_hit_ngrams`` counts distinct grams — a
     gram repeated in the document or the benchmark counts once.
 
-    `portable_hash` joins on the 60-bit md5 prefix (bit-identical in
-    DuckDB — the oracle-checked mode); the default joins on xxhash64
-    (~3× faster, the production path). A cross-gram hash collision
-    can only ADD a false-positive flag (never mask a hit) and needs a
-    64-bit collision against the broadcast set — negligible, and the
-    conservative direction for a leakage guard.
+    Grams join on their 60-bit md5 prefix, which DuckDB reproduces
+    bit for bit, so the operator is oracle-checked. A cross-gram hash
+    collision can only ADD a false-positive flag (never mask a hit)
+    and needs a 60-bit collision against the broadcast set —
+    negligible, and the conservative direction for a leakage guard.
 
     Documents shorter than `n` words have no shingles and are clean
     by definition (0, false) — never NULL.
     """
-    hits = _contamination_hits(
-        docs, bench, n, text_col, id_col, bench_text_col, portable_hash
-    )
+    hits = _contamination_hits(docs, bench, n, text_col, id_col, bench_text_col)
     # hits is bounded by the documents overlapping the (small) eval
     # set — broadcast it back rather than shuffling every corpus id.
     return docs.select(id_col).join(F.broadcast(hits), id_col, "left").select(
@@ -110,11 +104,10 @@ def drop_contaminated(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """The decontaminated corpus: `docs` minus contaminated rows
     (anti join against the flagged ids — same broadcast-probe plan)."""
     flagged = _contamination_hits(
-        docs, bench, n, text_col, id_col, bench_text_col, portable_hash
+        docs, bench, n, text_col, id_col, bench_text_col
     ).select(id_col)
     return docs.join(F.broadcast(flagged), id_col, "left_anti")

@@ -8,17 +8,18 @@ increasing recall / cost:
                   similarity, quadratic only within shared shingles.
 3. bottom-k     — portable MinHash-style sketch from md5 shingle
                   hashes (oracle-checkable in any SQL engine).
-4. minhash-LSH  — xxhash64 k-permutation signatures, banded into
-                  buckets; candidate pairs verified by exact Jaccard.
+4. minhash-LSH  — k-permutation signatures over 60-bit md5-prefix
+                  shingle hashes, banded into md5 bucket keys;
+                  candidate pairs verified by exact Jaccard.
                   The 100 TB path: cost ≈ O(n·bands) shuffle, no n².
-5. simhash      — 64-bit sign-sketch; near-dups = small Hamming
-                  distance on banded buckets.
+5. simhash      — 60-bit sign-sketch over the same md5-prefix hash;
+                  near-dups = small Hamming distance on banded buckets.
 
-Everything is Catalyst expressions (xxhash64/md5 are JVM builtins);
-no Python in any hot path. Tiers 4-5 accept ``portable_hash=True``
-to swap xxhash64 for a 60-bit md5-prefix hash reproducible in any
-SQL engine, which is how their registered queries are fully
-DuckDB-oracle-checked. Pair outputs feed
+Everything is Catalyst expressions (md5 is a JVM builtin); no Python
+in any hot path. Tiers 4-5 hash only with md5, which every SQL engine
+reproduces bit for bit, so their registered queries are fully
+DuckDB-oracle-checked and a persisted index always agrees with the
+batch that probes it. Pair outputs feed
 :func:`near_dedup_survivors` (greedy) or :func:`dedup_clusters`
 (transitive, via :func:`connected_components`).
 """
@@ -42,6 +43,9 @@ from aurora_mito_etl_spark.operators.textstats import (
 # Constants fixed (not runtime-random) so results are reproducible
 # across runs and cluster sizes.
 _MERSENNE_P = (1 << 31) - 1
+
+# SimHash width: the bits of the md5-prefix shingle hash.
+_SIMHASH_BITS = 60
 
 
 # Logical-plan node names that may appear in a pure SCAN CHAIN —
@@ -176,7 +180,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    persist_shingles: bool = False,
     max_shingle_docs: int | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard >= threshold.
@@ -198,8 +201,8 @@ def ngram_jaccard_pairs(
     both join sides). Recomputing the (cheap, codegen'd) shingle
     explode per branch measures FASTER on local[N] than caching it —
     MEMORY_AND_DISK materialization of the exploded table costs more
-    than the recompute — so `persist_shingles` defaults off; at
-    100 TB materialize the shingle table to Parquet once instead.
+    than the recompute — so it is never persisted here; at 100 TB
+    materialize the shingle table to Parquet once instead.
     """
     # Join on xxhash64(shingle): 8-byte shuffle keys instead of
     # multi-word strings (collision odds ~ distinct²/2⁶⁴ — nil).
@@ -209,8 +212,6 @@ def ngram_jaccard_pairs(
         .select(F.col(id_col), F.xxhash64("s").alias("sh"))
         .distinct()
     )
-    if persist_shingles:
-        sh = sh.persist()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     joinable = sh
     if max_shingle_docs is not None:
@@ -266,32 +267,6 @@ def bottom_k_sketch(df: DataFrame, text_col: str, id_col: str, k: int = 3, sketc
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, k_shingle: int, num_hashes: int
-) -> DataFrame:
-    """(id, m0..m{k-1}): k-permutation MinHash signature per document.
-
-    Plan shape: explode distinct shingles → xxhash64 → ONE hash
-    aggregate with `num_hashes` min columns (map-side partial agg).
-    An earlier formulation evaluated `num_hashes` array transforms
-    per row, re-deriving the shingle array each time — ~50× slower.
-    Docs with < k words have no shingles and drop out (they cannot be
-    near-duplicates of anything).
-    """
-    hashed = _spread(df).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_arrow(F.col(text_col), k_shingle))).alias("sh"),
-    ).select(F.col(id_col), F.pmod(F.xxhash64("sh"), F.lit(_MERSENNE_P)).alias("h"))
-    return hashed.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_MERSENNE_P))
-            ).alias(f"m{i}")
-            for i, (a, b) in enumerate(_perm_params(num_hashes))
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -300,7 +275,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable_hash: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH, verified by exact Jaccard.
@@ -311,11 +285,10 @@ def minhash_lsh_pairs(
     output has no false positives (false negatives bounded by the
     (bands, rows) S-curve).
 
-    `portable_hash=True` swaps xxhash64 for a 60-bit md5-prefix hash
-    and the band hash for an md5 string — both computable identically
-    in any SQL engine, making the whole operator (candidates AND
-    verification) DuckDB-oracle-checkable. xxhash64 (the default) is
-    ~3× faster; same semantics up to hash function.
+    Shingles hash to a 60-bit md5 prefix and each band to an md5
+    string — both computable identically in any SQL engine, making
+    the whole operator (candidates AND verification)
+    DuckDB-oracle-checkable.
 
     `max_bucket_size` caps hot LSH buckets, mirroring
     `ngram_jaccard_pairs`'s hot-shingle cap: a (band, band-hash)
@@ -328,8 +301,8 @@ def minhash_lsh_pairs(
     clusters never reach LSH. Default None = exact current semantics
     (the oracle-checked registered queries use None).
     """
-    hashed = _minhash_hashed(df, text_col, id_col, k_shingle, portable_hash)
-    stacked = _minhash_banded(hashed, id_col, num_hashes, bands, portable_hash)
+    hashed = _minhash_hashed(df, text_col, id_col, k_shingle)
+    stacked = _minhash_banded(hashed, id_col, num_hashes, bands)
     joinable = _drop_hot_buckets(stacked, max_bucket_size)
 
     left = joinable.select(F.col(id_col).alias("id_a"), "band", "bh")
@@ -379,18 +352,18 @@ def minhash_est_audit(
     banded-candidate chain as :func:`minhash_lsh_pairs` (no n² —
     auditing only what the index proposes), two keyed joins back to
     the signature table, exact-Jaccard verify on candidates only,
-    then a ≤ num_hashes+1-row map-side-combinable aggregate. Portable
-    md5 hashes so candidates, signatures AND verification replay in
-    the DuckDB oracle."""
+    then a ≤ num_hashes+1-row map-side-combinable aggregate. The md5
+    hashes let candidates, signatures AND verification replay in the
+    DuckDB oracle."""
     from aurora_mito_etl_spark.functions.numeric import micros6, micros_sum
 
-    hashed = _minhash_hashed(df, text_col, id_col, k_shingle, portable_hash=True)
+    hashed = _minhash_hashed(df, text_col, id_col, k_shingle)
     # ONE signature aggregate feeds both the banding and the per-slot
     # equality joins — building them independently would re-run the
     # shingle-explode + md5 + 16-MIN pipeline (the family's hottest
     # stage) twice.
     sigs = _minhash_sigs(hashed, id_col, num_hashes)
-    stacked = _bands_from_sigs(sigs, id_col, num_hashes, bands, portable_hash=True)
+    stacked = _bands_from_sigs(sigs, id_col, num_hashes, bands)
     left = stacked.select(F.col(id_col).alias("id_a"), "band", "bh")
     right = stacked.select(F.col(id_col).alias("id_b"), "band", "bh")
     candidates = (
@@ -451,7 +424,7 @@ def minhash_est_audit(
 
 
 def _minhash_hashed(
-    df: DataFrame, text_col: str, id_col: str, k_shingle: int, portable_hash: bool
+    df: DataFrame, text_col: str, id_col: str, k_shingle: int
 ) -> DataFrame:
     """(id, shingle-hash) — ONE shingle-explode expression feeds
     signatures AND verification sets (recompute beats cache
@@ -460,8 +433,7 @@ def _minhash_hashed(
         F.col(id_col),
         F.explode(F.array_distinct(shingles_arrow(F.col(text_col), k_shingle))).alias("s"),
     )
-    h_expr = md5_prefix60(F.col("s")) if portable_hash else F.xxhash64("s")
-    return shingle.select(F.col(id_col), h_expr.alias("h"))
+    return shingle.select(F.col(id_col), md5_prefix60(F.col("s")).alias("h"))
 
 
 def _minhash_sigs(hashed: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
@@ -480,41 +452,32 @@ def _minhash_sigs(hashed: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
 
 
 def _minhash_banded(
-    hashed: DataFrame, id_col: str, num_hashes: int, bands: int, portable_hash: bool
+    hashed: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """(id, band, band-hash) — k-permutation signatures folded into
     per-band keys and stacked one row per band."""
     sigs = _minhash_sigs(hashed, id_col, num_hashes)
-    return _bands_from_sigs(sigs, id_col, num_hashes, bands, portable_hash)
+    return _bands_from_sigs(sigs, id_col, num_hashes, bands)
 
 
 def _bands_from_sigs(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, portable_hash: bool
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """Banding half of :func:`_minhash_banded`, taking a prebuilt
     signature table — callers that ALSO need the signatures
     (:func:`minhash_est_audit`) reuse one aggregate instead of
     re-running the shingle-explode + hash + 16-MIN pipeline twice."""
     rows_per_band = num_hashes // bands
-    if portable_hash:
-        band_cols = [
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.lit(str(i)),
-                    *[F.col(f"m{i * rows_per_band + r}") for r in range(rows_per_band)],
-                )
-            ).alias(f"band_{i}")
-            for i in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(
-                F.lit(i),
+    band_cols = [
+        F.md5(
+            F.concat_ws(
+                ",",
+                F.lit(str(i)),
                 *[F.col(f"m{i * rows_per_band + r}") for r in range(rows_per_band)],
-            ).alias(f"band_{i}")
-            for i in range(bands)
-        ]
+            )
+        ).alias(f"band_{i}")
+        for i in range(bands)
+    ]
     banded = sigs.select(F.col(id_col), *band_cols)
     return banded.select(
         F.col(id_col),
@@ -599,7 +562,6 @@ def minhash_lsh_join(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable_hash: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Incremental near-dup: (new_id, corpus_id, jaccard) pairs
@@ -617,11 +579,11 @@ def minhash_lsh_join(
 
     Output column names: ``new_id``, ``corpus_id``, ``jaccard``.
     """
-    hashed_new = _minhash_hashed(new_df, text_col, id_col, k_shingle, portable_hash)
-    hashed_corp = _minhash_hashed(corpus_df, text_col, id_col, k_shingle, portable_hash)
-    stacked_new = _minhash_banded(hashed_new, id_col, num_hashes, bands, portable_hash)
+    hashed_new = _minhash_hashed(new_df, text_col, id_col, k_shingle)
+    hashed_corp = _minhash_hashed(corpus_df, text_col, id_col, k_shingle)
+    stacked_new = _minhash_banded(hashed_new, id_col, num_hashes, bands)
     stacked_corp = _drop_hot_buckets(
-        _minhash_banded(hashed_corp, id_col, num_hashes, bands, portable_hash),
+        _minhash_banded(hashed_corp, id_col, num_hashes, bands),
         max_bucket_size,
     )
     candidates = (
@@ -644,7 +606,6 @@ def persist_corpus_index(
     k_shingle: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    portable_hash: bool = False,
     num_buckets: int = 32,
 ) -> tuple[str, str]:
     """Materialize the corpus side of :func:`minhash_lsh_join` ONCE,
@@ -660,15 +621,15 @@ def persist_corpus_index(
       verify join on corpus_id is likewise corpus-side Exchange-free.
 
     Re-running overwrites (idempotent re-index). Use the same
-    (k_shingle, num_hashes, bands, portable_hash) in
-    :func:`minhash_lsh_join_persisted` — band hashes are a function of
-    those parameters, so a mismatch silently yields no candidates.
+    (k_shingle, num_hashes, bands) in :func:`minhash_lsh_join_persisted`
+    — band hashes are a function of those parameters, so a mismatch
+    silently yields no candidates.
     Pinned by tests/test_bucketing_jsonl.py.
     """
     from aurora_mito_etl_spark.sources.io import write_bucketed_table
 
-    hashed = _minhash_hashed(corpus_df, text_col, id_col, k_shingle, portable_hash)
-    stacked = _minhash_banded(hashed, id_col, num_hashes, bands, portable_hash)
+    hashed = _minhash_hashed(corpus_df, text_col, id_col, k_shingle)
+    stacked = _minhash_banded(hashed, id_col, num_hashes, bands)
     sets = hashed.groupBy(id_col).agg(F.collect_set("h").alias("shs"))
     bands_table = f"{table_prefix}_bands"
     sets_table = f"{table_prefix}_shingles"
@@ -689,7 +650,6 @@ def minhash_lsh_join_persisted(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable_hash: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """:func:`minhash_lsh_join` against a corpus index persisted by
@@ -702,8 +662,8 @@ def minhash_lsh_join_persisted(
     ``jaccard`` — identical to the recompute path (parity pinned by
     tests/test_bucketing_jsonl.py).
     """
-    hashed_new = _minhash_hashed(new_df, text_col, id_col, k_shingle, portable_hash)
-    stacked_new = _minhash_banded(hashed_new, id_col, num_hashes, bands, portable_hash)
+    hashed_new = _minhash_hashed(new_df, text_col, id_col, k_shingle)
+    stacked_new = _minhash_banded(hashed_new, id_col, num_hashes, bands)
     stacked_corp = _drop_hot_buckets(
         spark.table(f"{table_prefix}_bands"), max_bucket_size
     )
@@ -736,7 +696,6 @@ def index_snapshot(
     k_shingle: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    portable_hash: bool = False,
     num_buckets: int = 32,
 ) -> tuple[str, str]:
     """Persist the LSH corpus index for ONE snapshot version of a
@@ -761,7 +720,6 @@ def index_snapshot(
         k_shingle=k_shingle,
         num_hashes=num_hashes,
         bands=bands,
-        portable_hash=portable_hash,
         num_buckets=num_buckets,
     )
 
@@ -778,7 +736,6 @@ def cross_release_near_dup(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable_hash: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Release N+1 near-dup'd against release N WITHOUT re-reading
@@ -825,7 +782,6 @@ def cross_release_near_dup(
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        portable_hash=portable_hash,
         max_bucket_size=max_bucket_size,
     )
 
@@ -976,51 +932,42 @@ def simhash64_df(
     text_col: str,
     id_col: str,
     k_shingle: int = 3,
-    n_bits: int = 64,
-    portable_hash: bool = False,
 ) -> DataFrame:
-    """(id, sh64): n_bits-bit SimHash of each document's shingle set.
+    """(id, sh64): 60-bit SimHash of each document's shingle set.
 
     Plan shape: explode distinct shingles → hash → ONE hash aggregate
-    with `n_bits` `sum(±1 per bit)` columns (map-side partial agg,
-    all codegen'd) → fold the sign bits into a long. This replaces a
+    with 60 `sum(±1 per bit)` columns (map-side partial agg, all
+    codegen'd) → fold the sign bits into a long. This replaces a
     per-row higher-order fold over 64-slot arrays, which built a
     multi-megabyte expression tree and ran ~100× slower.
 
-    `portable_hash=True` uses the 60-bit md5-prefix hash (n_bits must
-    be ≤ 60) so the sketch is bit-identical in any SQL engine.
+    The 60 bits are those of the md5-prefix shingle hash, so the
+    sketch is bit-identical in any SQL engine.
     """
-    if portable_hash:
-        assert n_bits <= 60, "md5-prefix hash provides 60 bits"
-        h_expr = md5_prefix60(F.col("s"))
-    else:
-        h_expr = F.xxhash64("s")
     hashed = _spread(df).select(
         F.col(id_col),
         F.explode(
             F.array_distinct(shingles_arrow(F.col(text_col), k_shingle))
         ).alias("s"),
-    ).select(F.col(id_col), h_expr.alias("h"))
+    ).select(F.col(id_col), md5_prefix60(F.col("s")).alias("h"))
     votes = hashed.groupBy(id_col).agg(
         *[
             F.sum(
                 F.when(F.getbit(F.col("h"), F.lit(b)) == 1, 1).otherwise(-1)
             ).alias(f"b{b}")
-            for b in range(n_bits)
+            for b in range(_SIMHASH_BITS)
         ]
     )
-    # +2^b per positive-vote bit; bit 63 (if used) is the
-    # two's-complement min-long term.
+    # +2^b per positive-vote bit.
     acc = F.lit(0).cast("long")
-    for b in range(n_bits):
+    for b in range(_SIMHASH_BITS):
         acc = acc + F.when(
-            F.col(f"b{b}") > 0,
-            F.lit(1 << b if b < 63 else -(1 << 63)).cast("long"),
+            F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     # Docs with no shingles (< k words) drop out — they have no
     # content signature, and keeping them at sh64=0 would make every
     # pair of short docs a spurious hamming-0 "duplicate" (same
-    # contract as minhash_signatures).
+    # contract as the MinHash signatures).
     return votes.select(F.col(id_col), acc.alias("sh64"))
 
 
@@ -1097,24 +1044,18 @@ def simhash_pairs(
     id_col: str,
     k_shingle: int = 3,
     max_hamming: int = 8,
-    portable_hash: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming.
 
-    Candidate generation by 4-band equality (any doc pair within
-    Hamming ≤ 3 shares at least one exact band; wider radii trade
-    recall) — the banding keeps this O(n) shuffle at scale.
-
-    `portable_hash=True` computes a 60-bit engine-portable sketch
-    (4×15-bit bands) so the whole operator is oracle-checkable.
+    Candidate generation by 4-band equality on the 60-bit sketch
+    (4×15-bit bands; any doc pair within Hamming ≤ 3 shares at least
+    one exact band; wider radii trade recall) — the banding keeps this
+    O(n) shuffle at scale, and the whole operator is oracle-checkable.
     """
-    n_bits, band_bits = (60, 15) if portable_hash else (64, 16)
-    sh = simhash64_df(
-        df, text_col, id_col, k_shingle, n_bits=n_bits, portable_hash=portable_hash
-    )
+    sh = simhash64_df(df, text_col, id_col, k_shingle)
     return banded_hamming_pairs(
-        sh, id_col, "sh64", band_bits=band_bits, n_bands=4,
+        sh, id_col, "sh64", band_bits=_SIMHASH_BITS // 4, n_bands=4,
         max_hamming=max_hamming, max_bucket_size=max_bucket_size,
     )
 
@@ -1131,7 +1072,6 @@ def duplicate_spans(
     k: int = 10,
     min_span_tokens: int = 20,
     max_window_docs: int | None = None,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Maximal verbatim token runs shared between document pairs —
     word-granularity exact substring dedup (Lee et al. 2022,
@@ -1155,16 +1095,13 @@ def duplicate_spans(
     only corpus-sized shuffles are the window join and the per-
     (pair, diagonal) island window.
     """
-    h_expr = (
-        md5_prefix60(F.col("s")) if portable_hash else F.xxhash64("s")
-    )
     w = (
         _spread(df)
         .select(
             F.col(id_col),
             F.posexplode(shingles_arrow(F.col(text_col), k)).alias("pos", "s"),
         )
-        .select(F.col(id_col), F.col("pos"), h_expr.alias("h"))
+        .select(F.col(id_col), F.col("pos"), md5_prefix60(F.col("s")).alias("h"))
     )
     if max_window_docs is not None:
         hot = (

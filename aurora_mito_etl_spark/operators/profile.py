@@ -26,9 +26,7 @@ column's distinct count, not the row count.
 ``exact=False`` (the 100 TB fast path) — a single aggregate pass
 where n_distinct is HyperLogLog++ (``approx_count_distinct``,
 default 5% rsd): no Expand, no explode, no second shuffle. Same
-output schema; pytest-pinned against the exact path on fixtures
-(the portable-vs-prod twin discipline of dedup.py's
-``portable_hash``).
+output schema; pytest-pinned against the exact path on fixtures.
 
 Numeric values are normalized through ``CAST(c AS DOUBLE) + 0.0``
 before min/max/distinct: the +0.0 collapses IEEE -0.0 into +0.0 so

@@ -268,7 +268,7 @@ def pq_encode_arrow(
     id_col: str = "vec_id",
     seed: int = 11,
 ) -> DataFrame:
-    """Arrow production twin of :func:`pq_encode`: one numpy
+    """Arrow kernel of the :func:`pq_encode` spec: one numpy
     (batch × n_centroids) score matrix per subspace instead of the
     interpreted higher-order-function folds (Spark does not codegen
     lambda expressions — measured ~4× faster at sf0.1).
@@ -475,7 +475,6 @@ def pq_adc_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     seed: int = 11,
-    arrow_encode: bool = True,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes —
     the search half of product quantization (Jégou et al., TPAMI
@@ -504,17 +503,13 @@ def pq_adc_topk(
     """
     books = pq_codebooks(dim, m, n_centroids, seed)
     subdim = dim // m
-    # Corpus codes default to the Arrow encoder — BIT-IDENTICAL to the
-    # expression path (pinned by test_quantize code-equality), ~10×
-    # faster (Spark interprets HOF lambdas per element per row).
-    if arrow_encode:
-        codes = pq_encode_arrow(
-            vectors, dim, m, n_centroids, vec_col=vec_col, id_col=id_col, seed=seed
-        ).select(id_col, *[f"pq_{j}" for j in range(m)])
-    else:
-        codes = pq_encode(
-            vectors, dim, m, n_centroids, vec_col=vec_col, seed=seed
-        ).select(id_col, *[f"pq_{j}" for j in range(m)])
+    # Corpus codes come from the Arrow encoder — BIT-IDENTICAL to the
+    # expression spec `pq_encode` (pinned by test_quantize
+    # code-equality), ~10× faster (Spark interprets HOF lambdas per
+    # element per row).
+    codes = pq_encode_arrow(
+        vectors, dim, m, n_centroids, vec_col=vec_col, id_col=id_col, seed=seed
+    ).select(id_col, *[f"pq_{j}" for j in range(m)])
 
     qt = queries.select(
         F.col(query_id_col), *_adc_distance_table_cols(books, subdim, query_vec_col)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from aurora_mito_etl_spark.functions.hashing import md5_prefix60
 
 # 60-bit md5 prefix → uniform bucket in [0, 1e6): the same portable
-# construction the dedup sketches use (dedup.py portable_hash).
+# construction the dedup sketches use (dedup.py).
 _BUCKETS = 1_000_000
 
 

@@ -689,9 +689,7 @@ def _ordered_gram(A, B):
     return G
 
 
-def _same_bucket_pairs(
-    both: DataFrame, id_type, margin: float, blas: bool = False
-) -> DataFrame:
+def _same_bucket_pairs(both: DataFrame, id_type, margin: float) -> DataFrame:
     """Pair-verify engine shared by the LSH near-dup and SemDeDup
     operators: `both` carries (id, __v, __vn, side, bucket); within
     each bucket group every (side=0, side=1) pair with id_a < id_b
@@ -702,20 +700,11 @@ def _same_bucket_pairs(
     candidate pair: Arrow traffic is O(n · probes) vectors while pair
     enumeration and the gram products stay in numpy.
 
-    Two gram paths, same plan:
-
-    - ``blas=False`` (oracle/portable): cache-blocked ordered
-      accumulation (:func:`_ordered_gram` — dimension-at-a-time per
-      element) so every partial sum is the exact left-to-right fold
-      Catalyst's aggregate(zip_with) and DuckDB's list_dot_product
-      produce — the bit-parity contract that keeps these operators
-      oracle-checkable.
-    - ``blas=True`` (production): one ``A @ B.T`` dgemm per chunk.
-      BLAS pairwise summation can differ from the ordered fold by
-      O(dim·eps) relative error, so a cosine sitting within ~1e-12 of
-      the threshold may flip — callers' `margin` safety gap (1e-6)
-      dwarfs that; twin equality on real data is pinned by
-      tests/test_similarity_prod_twins.py. This is the 100 TB path.
+    Gram products use cache-blocked ordered accumulation
+    (:func:`_ordered_gram` — dimension-at-a-time per element) so every
+    partial sum is the exact left-to-right fold Catalyst's
+    aggregate(zip_with) and DuckDB's list_dot_product produce — the
+    bit-parity contract that keeps these operators oracle-checkable.
 
     Callers re-round and re-test the threshold in Catalyst; `margin`
     keeps a safety gap.
@@ -755,8 +744,7 @@ def _same_bucket_pairs(
         for lo in range(0, len(ida), chunk):
             hi = min(lo + chunk, len(ida))
             A = np.array(asel["__v"].iloc[lo:hi].tolist(), dtype=np.float64)
-            G = (A @ B.T) if blas else _ordered_gram(A, B)
-            cos = G / (na[lo:hi, None] * nb[None, :])
+            cos = _ordered_gram(A, B) / (na[lo:hi, None] * nb[None, :])
             ri, ci = np.nonzero(
                 (ida[lo:hi, None] < idb[None, :]) & (cos >= margin)
             )
@@ -779,7 +767,6 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     multi_probe: int = 0,
     candidate_budget: int | None = None,
-    blas: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH bucketing: only
     same-bucket pairs are scored (O(n·bucket_width) not O(n²)),
@@ -798,11 +785,7 @@ def embedding_near_dup_pairs(
     purely declarative — bucket sizes + one cumulative-sum window —
     so it is expressible in the SQL oracle too. Recall degrades
     gracefully: the nearest (low-distance) buckets are always probed
-    first.
-
-    `blas=True` switches the in-bucket gram products from the ordered
-    oracle-parity fold to one dgemm per chunk (the production fast
-    path; see :func:`_same_bucket_pairs`)."""
+    first."""
     planes = _hyperplanes(dim, n_planes)
     vb = (
         with_norm(vectors, vec_col, "__v", "__vn")
@@ -863,9 +846,7 @@ def embedding_near_dup_pairs(
     # the exact threshold test stay in Catalyst (engine-portable floor
     # form) — the numpy prefilter keeps a safety margin.
     out = (
-        _same_bucket_pairs(
-            both, vectors.schema[id_col].dataType, threshold - 1e-6, blas=blas
-        )
+        _same_bucket_pairs(both, vectors.schema[id_col].dataType, threshold - 1e-6)
         .select("id_a", "id_b", _fixed6(F.col("__raw")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -931,7 +912,6 @@ def semantic_dedup(
     dim: int = 64,
     n_cells: int = 16,
     centroids: list[list[float]] | None = None,
-    blas: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings with a coarse
     quantizer, then drop within-cluster cosine near-duplicates.
@@ -962,8 +942,6 @@ def semantic_dedup(
     out of scope by construction (the paper's recall trade); raise
     `n_cells` resolution or run the LSH tier for cross-cell recall.
     Wrong-dim / NULL vectors are excluded from the roster.
-    `blas=True` runs the in-cell gram as one dgemm per chunk (the
-    production path; see :func:`_same_bucket_pairs`).
     """
     import numpy as np
     import pandas as pd
@@ -1002,9 +980,7 @@ def semantic_dedup(
         with np.errstate(divide="ignore", invalid="ignore"):
             for lo in range(0, len(ids), chunk):
                 hi = min(lo + chunk, len(ids))
-                A = B[lo:hi]
-                G = (A @ B.T) if blas else _ordered_gram(A, B)
-                cos = G / (nb[lo:hi, None] * nb[None, :])
+                cos = _ordered_gram(B[lo:hi], B) / (nb[lo:hi, None] * nb[None, :])
                 # prior = strictly smaller id; NaN (zero-norm) and
                 # sub-margin cosines never qualify (NaN >= x is False)
                 ok = (ids[None, :] < ids[lo:hi, None]) & (cos >= margin)

@@ -8,11 +8,10 @@ aggregates use the decimal-cast convention from
 :mod:`aurora_mito_etl_spark.functions.numeric` so values are
 bit-identical across engines.
 
-Every registered query has an oracle: hash-based operators run their
-portable md5-derived variant here (xxhash64 fast paths are
-pytest-verified and bench-timed separately), LSH/IVF run over pinned
-planes/centroids, and pandas-UDF paths (LLM classify, media decode)
-use deterministic SQL-expressible backends.
+Every registered query has an oracle: hash-based sketch operators
+hash only with md5-derived keys that DuckDB reproduces, LSH/IVF run
+over pinned planes/centroids, and pandas-UDF paths (LLM classify,
+media decode) use deterministic SQL-expressible backends.
 """
 
 from __future__ import annotations
@@ -1906,7 +1905,7 @@ def docs_dup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def docs_bottom_k_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable MinHash-style bottom-k sketch (md5 — reproducible in
-    any engine; the xxhash64 banded-LSH variant is the scale path).
+    any engine; the banded MinHash-LSH tier is the scale path).
 
     Contract: ONE row per document — the Spark side is a pure
     projection (no explode/groupBy, so no row loss), and a doc with
@@ -1919,7 +1918,7 @@ def docs_bottom_k_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3) -> str:
-    """Full SQL twin of the portable-hash MinHash-LSH operator:
+    """Full SQL twin of the md5-hashed MinHash-LSH operator:
     identical 60-bit md5 shingle hashes, identical permutation
     constants, identical md5 band keys — candidates AND verification
     reproduced in DuckDB."""
@@ -2030,8 +2029,7 @@ def docs_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle composes the full MinHash chain with the same predicate."""
     d = load_table(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(
-        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4,
-        threshold=0.3, portable_hash=True,
+        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4, threshold=0.3
     )
     return sp.split_leakage_report(
         pairs, "id_a", "id_b", "jaccard", holdout_rate=0.2, salt="split"
@@ -2135,14 +2133,11 @@ def docs_minhash_est_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("docs_minhash_lsh_pairs", _minhash_oracle())
 def docs_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, Jaccard-verified — the 100 TB dedup
-    path (O(n·bands) shuffle). Runs with portable md5-derived hashes
-    so the ENTIRE operator (banding + verification) is oracle-checked;
-    the xxhash64 fast path shares every other expression and is
-    pytest-verified against ground truth."""
+    path (O(n·bands) shuffle). Its md5-derived hashes let the ENTIRE
+    operator (banding + verification) be oracle-checked."""
     d = load_table(spark, sf_dir, "documents")
     return dd.minhash_lsh_pairs(
-        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4, threshold=0.3,
-        portable_hash=True,
+        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4, threshold=0.3
     )
 
 
@@ -2183,14 +2178,11 @@ def _simhash_oracle(n_bits: int = 60, band_bits: int = 15, max_hamming: int = 16
 
 @_register("docs_simhash_pairs", _simhash_oracle())
 def docs_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via band blocking + Hamming filter,
-    run with the portable 60-bit md5 sketch so banding and Hamming
-    verification are both oracle-checked (xxhash64 64-bit variant is
-    the default fast path elsewhere)."""
+    """SimHash near-dup pairs via band blocking + Hamming filter over
+    the 60-bit md5 sketch, so banding and Hamming verification are
+    both oracle-checked."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.simhash_pairs(
-        d, "text", "doc_id", k_shingle=3, max_hamming=16, portable_hash=True
-    )
+    return dd.simhash_pairs(d, "text", "doc_id", k_shingle=3, max_hamming=16)
 
 
 # ---------------------------------------------------------------------------
@@ -3418,9 +3410,7 @@ def docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     'benchmark' slice (doc_id < 5) are flagged. Broadcast hash-join
     probe — the corpus side never shuffles."""
     d = load_table(spark, sf_dir, "documents")
-    return dc.ngram_contamination(
-        d, d.filter(F.col("doc_id") < 5), n=4, portable_hash=True
-    )
+    return dc.ngram_contamination(d, d.filter(F.col("doc_id") < 5), n=4)
 
 
 # Bloom-prefiltered decontamination (operators/bloom.py): same verdict
@@ -6111,7 +6101,7 @@ def flagship_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Arrow shingle pass on the join's AQE-coalesced partitions
     # (measured 3× slower at sf0.1)
     flagged = dc.ngram_contamination(
-        d, d.filter(F.col("doc_id") < 5), n=4, portable_hash=True
+        d, d.filter(F.col("doc_id") < 5), n=4
     ).filter(F.col("contaminated")).select("doc_id")
     d3 = d2.join(F.broadcast(flagged), "doc_id", "left_anti")
     return pk.pack_sequences(d3, capacity=128)
@@ -6159,7 +6149,7 @@ def docs_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     would run k=10 windows / 20-token spans)."""
     return dd.duplicate_spans(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        k=3, min_span_tokens=5, portable_hash=True,
+        k=3, min_span_tokens=5,
     )
 
 
@@ -7907,7 +7897,7 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_join_oracle(
     num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
 ) -> str:
-    """SQL twin of the portable-hash incremental MinHash-LSH join:
+    """SQL twin of the md5-hashed incremental MinHash-LSH join:
     identical hashes/permutations/band keys, but candidates strictly
     across the odd (new) / even (corpus) doc_id split."""
     from aurora_mito_etl_spark.operators.dedup import _MERSENNE_P, _perm_params
@@ -7962,7 +7952,8 @@ def docs_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined strictly across sides so candidate cost is O(new·bands)
     bucket probes, never a corpus self-join — the per-release dedup
     pattern at 100 TB (corpus bands persisted, only the batch is
-    hashed). Portable-hash mode: the whole operator is oracle-checked.
+    hashed). The md5-derived hashes let the whole operator be
+    oracle-checked.
     """
     d = load_table(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 2 == 1)
@@ -7970,7 +7961,6 @@ def docs_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_join(
         new, corpus, "text", "doc_id",
         k_shingle=3, num_hashes=16, bands=4, threshold=0.3,
-        portable_hash=True,
     )
 
 
@@ -8470,8 +8460,8 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ran the interpreted expression path — 64 higher-order-function
     folds per row (Spark does not codegen lambda expressions),
     measured 2.5 s vs 0.4 s for the bit-identical Arrow twin at
-    sf0.1. The expression path stays exercised by the twin tests;
-    `emb_pq_encode_prod` in bench.py now measures the same plan."""
+    sf0.1. The expression path stays as the spec the twin tests
+    compare the Arrow kernel against."""
     e = _emb_nn(spark, sf_dir).select("vec_id", "embedding")
     return qz.pq_encode_arrow(e, dim=64, m=4, n_centroids=16).select(
         "vec_id", "pq_0", "pq_1", "pq_2", "pq_3", "pq_csv"
@@ -10154,118 +10144,76 @@ def docs_host_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query inside it, (b) every query lagging > 3 rounds is in the window
 # or the documented backlog, (c) DRIVER_WINDOW_BUILT_FOR_ROUND is not
 # behind the newest committed artifact (the next-round rebuild nudge).
-#
-# r13 window: last-green map recomputed from CORRECTNESS_r01–r12
-# (8 r7, 14 r8, 15 r9, 48 r10, 48 r11, 50 r12; every query green at
-# least once). Stale pool at the r13 rebuild (stale_cut = 10, i.e.
-# last-green < r10) is 37 queries — the full 22-name r12 backlog
-# (8 r7 + 14 r8) plus all 15 r9 — and for the first time the whole
-# stale pool FITS in the 48 non-pinned slots, so the backlog empties.
-# The 11 remaining slots go to r10-green queries chosen for family
-# spread, preferring families with no other in-window representative:
-#   docs_media_features   (multimodal tier — only rep anywhere)
-#   release_sink_smoke    (K1–K4 sinks — only rep)
-#   docs_classify_stub    (LLM batch classify D5/S8 — only rep)
-#   events_pagerank       (iterative graph — pagerank specifically)
-#   docs_dup_kcore        (dup-graph analytics beyond CC)
-#   events_psi_drift      (distribution drift — PSI specifically)
-#   docs_length_ks        (KS/ECDF family — the r11 NULL-ordering class)
-#   emb_pca_cov           (PCA family — cov is the root of pc1/project2)
-#   lineitem_price_moments (moments/higher-order stats family)
-#   docs_contiguous_ids   (rownum/contiguous-ID two-phase family)
-#   events_k_anonymity    (privacy/k-anon — only rep)
-# Their r10 siblings stay outside with lag 3 (not stale), covered by
-# verify_local at both SFs, the fuzz campaign, plan audit and bench.
-# Evicted: all 48 r11-green + the 48 non-pinned r12-green members;
-# every family they carried keeps at least one in-window rep via the
-# stale pool (quantiles via lineitem_price_percentiles_approx +
-# lineitem_profile, LSH via docs_minhash_lsh_pairs + emb_lsh_recall,
-# BPE via docs_bpe_pair_counts + docs_bpe_subwords + the fertility
-# query, quality via docs_gopher_quality + docs_source_report_quality,
-# sessions/events via events_top_paths + events_key_skew_report).
-# NEW queries registered during r13 always enter; each one's slot
-# donor comes from the 11 r10 picks above (freshest in-window class),
-# documented per query at the point of insertion below.
 # ---------------------------------------------------------------------------
 
 DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     # Pinned flagships (every round)
     "flagship_training_corpus",
     "flagship_compound_mentions",
-    # ---- r14 rebuild (stalest-first; see DRIVER_WINDOW_BUILT_FOR_ROUND).
-    # Last driver-green rounds recomputed over CORRECTNESS_r01..r13:
-    # r10-green = 42 queries (lag 4 — the ENTIRE stale pool, all in),
-    # r11-green = 48 (lag 3, not stale), r12 = 48, r13 = 50.
-    # All 42 r10-green queries, alphabetical:
-    "docs_ac_dict_filter",
-    "docs_bpe_train",
-    "docs_char_entropy",
-    "docs_cms_estimates",
-    "docs_dedup_lines_global",
-    "docs_dup_kcore",
-    "docs_dup_triangles",
-    "docs_exact_substring_spans",
-    "docs_label_spread",
-    "docs_length_histogram",
-    "docs_line_language",
-    "docs_mmr_rerank",
-    "docs_quality_funnel",
-    "docs_rrf_fusion",
-    "docs_source_overlap",
-    "docs_source_report",
-    "docs_split_leakage",
-    "docs_temperature_mixture",
-    "docs_zipf_slope",
-    "emb_benchmark_decontam",
-    "emb_cov_drift",
-    "emb_dim_stats",
-    "emb_hard_positives",
-    "emb_ivfpq_rerank",
-    "emb_jl_distortion",
-    "emb_jl_project",
-    "emb_pca_cov",
-    "emb_pca_pc1",
-    "emb_pca_project2",
-    "emb_rbo_overlap",
-    "emb_whitened_norm",
-    "events_funnel_windowed",
-    "events_hits",
-    "events_k_anonymity",
-    "events_profile",
-    "events_psi_drift",
-    "events_rfm",
-    "events_type_hour_chi2",
-    "events_value_anomaly",
-    "lineitem_price_moments",
-    "lineitem_price_percentiles",
-    "shipping_priority_topk",
-    # 6 remaining slots from the r11-green bucket (lag 3, tie —
-    # family-spread picks): the four paths REWRITTEN this round face
-    # the driver's regenerated data immediately (the in-plan
-    # prefix-sum offsets behind customer_balance_quartiles and the
-    # two exact-quantile forms; the lazily-checkpointed retrieval
-    # index behind docs_bm25_search), plus the CC-backed
-    # docs_near_dedup_best (lazy checkpoint loop) and
-    # revenue_by_nation (relational join family — exercises the
-    # preferSortMergeJoin=false adoption in the bench session).
-    "customer_balance_quartiles",
-    "lineitem_price_quantiles_dist",
-    "lineitem_price_quantiles_grouped",
-    "docs_bm25_search",
-    "docs_near_dedup_best",
-    "revenue_by_nation",
+    # ---- r15 rebuild. Last driver-green rounds over CORRECTNESS_r01..r14:
+    # r11 = 42 (stale, lag 4 — all in), r12 = 48, r13 = 48, r14 = 50.
+    # All 42 r11-green queries, alphabetical:
+    "acctbal_threshold_label",
+    "best_part_per_brand",
+    "docs_bottom_k_sketch",
+    "docs_c4_filter",
+    "docs_decontaminate",
+    "docs_duplicate_spans",
+    "docs_epoch_shuffle",
+    "docs_fingerprint",
+    "docs_lang_id",
+    "docs_ngram_jaccard_pairs",
+    "docs_ordered_typos",
+    "docs_paren_truncate",
+    "docs_quality",
+    "docs_stratified_sample",
+    "docs_token_explode",
+    "docs_token_positions",
+    "docs_token_stats",
+    "docs_top_words",
+    "docs_topical_filter",
+    "emb_array_ops",
+    "emb_cosine_topk",
+    "emb_lsh_topk",
+    "emb_near_dup_exact",
+    "emb_pq_adc_topk",
+    "emb_quantize_int8",
+    "events_funnel",
+    "events_hourly",
+    "events_interval_join",
+    "events_json_extract",
+    "events_moving_avg",
+    "events_session_windows",
+    "keep_first_order_per_customer",
+    "lineitem_corr_stats",
+    "lineitem_qty_range_join",
+    "local_supplier_volume",
+    "order_priority_counts",
+    "order_value_bins",
+    "orders_above_segment_avg",
+    "orders_zorder_key",
+    "pricing_rollup",
+    "topk_mean_supplier",
+    "union_known_panel",
+    # 6 family-spread picks from the r12-green bucket (lag 3, tie):
+    "docs_simhash_pairs",  # SimHash tier — its hash width became a constant
+    "emb_lsh_near_dup",  # embedding LSH verify — ordered gram is its only path
+    "docs_minhash_est_audit",  # MinHash-LSH family — no other in-window rep
+    "docs_tfidf_topk",  # tf-idf family — lazy-checkpointed postings
+    "lineitem_price_quantiles_grouped_dist",  # two-level mega-group quantiles
+    "docs_pii_redact",  # redaction family — only rep
 )
 
 # The round this window was built for (bumped at each rebuild; the
 # policy test forces the rebuild once the round-N artifact lands).
-DRIVER_WINDOW_BUILT_FOR_ROUND = 14
+DRIVER_WINDOW_BUILT_FOR_ROUND = 15
 
 DRIVER_WINDOW_PINNED: tuple[str, ...] = (
     "flagship_training_corpus",
     "flagship_compound_mentions",
 )
 
-# Stale (lag > 3 rounds at the r14 rebuild) but out of slots — EMPTY
+# Stale (lag > 3 rounds at the r15 rebuild) but out of slots — EMPTY
 # this round: the whole 42-query stale pool fit in the window.
 DRIVER_WINDOW_DEFERRED: tuple[str, ...] = ()
 

@@ -59,7 +59,7 @@ _STATE_SCHEMA = T.StructType(
 def _signature_udf(k_shingle: int, num_hashes: int):
     """Arrow-batched per-row MinHash signature — the same shingle
     normalization as shingles_arrow and the same md5-base +
-    permutation scheme as the batch tier's portable mode, computed
+    permutation scheme as the batch tier, computed
     row-locally (no shuffle, required for streaming)."""
     perms = _perm_params(num_hashes)
 

@@ -168,64 +168,6 @@ HEADLINE = [
     "flagship_training_corpus",
 ]
 
-# Production-hash dedup variants (xxhash64): the registered queries
-# run portable md5-derived hashes so DuckDB can oracle-check the whole
-# operator (~3× slower, dedup.py's documented portability tax). The
-# headline number must ALSO show the 100 TB fast path, so bench times
-# both — same plan shape, only the hash expression differs.
-PROD_VARIANTS = {
-    "docs_minhash_lsh_pairs_prod": lambda dd, lt, spark, sf_dir: dd.minhash_lsh_pairs(
-        lt(spark, sf_dir, "documents"), "text", "doc_id",
-        k_shingle=3, num_hashes=16, bands=4, threshold=0.3, portable_hash=False,
-    ),
-    # r4/r5 flagged this twin as measuring SLOWER than the portable
-    # path. Profiled r6 on a quiet box (best-of-3 per substage,
-    # sf0.1): prod is faster or equal at EVERY stage — hash 0.65s vs
-    # 0.87s (xxhash64 vs md5+substr+conv), signature agg 1.16s vs
-    # 1.21s, pairs 1.39s vs 1.48s — and the shared shingles_arrow
-    # explode dominates both, so the deltas sit inside this box's
-    # noise band (portable sig alone swung 1.21-2.45s across repeats
-    # in one session). The earlier inversions were interleaved-bench
-    # noise, not a real cost: 64 vs 60 vote columns is the only
-    # structural difference. A sum(getbit)+count reformulation of the
-    # votes was measured bit-identical and not reliably faster; kept
-    # the simpler ±1-vote form.
-    "docs_simhash_pairs_prod": lambda dd, lt, spark, sf_dir: dd.simhash_pairs(
-        lt(spark, sf_dir, "documents"), "text", "doc_id",
-        k_shingle=3, max_hamming=16, portable_hash=False,
-    ),
-    # Arrow/BLAS PQ encode (expression-fold twin is the oracle path;
-    # Spark interprets lambda expressions, numpy batches don't)
-    "emb_pq_encode_prod": lambda dd, lt, spark, sf_dir: __import__(
-        "aurora_mito_etl_spark.operators.quantize", fromlist=["quantize"]
-    ).pq_encode_arrow(
-        lt(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-        dim=64, m=4, n_centroids=16,
-    ),
-    # BLAS verify twins of the embedding near-dup tier: the registered
-    # queries run the ordered oracle-parity gram fold; these run one
-    # dgemm per chunk in the same bucketed plan (similarity.py
-    # _same_bucket_pairs blas=True). Same parameters as the registered
-    # queries; pair equality pinned by test_similarity_prod_twins.py.
-    "emb_lsh_near_dup_prod": lambda dd, lt, spark, sf_dir: __import__(
-        "aurora_mito_etl_spark.operators.similarity", fromlist=["similarity"]
-    ).embedding_near_dup_pairs(
-        lt(spark, sf_dir, "embeddings"),
-        threshold=0.4, n_planes=4, dim=64, multi_probe=2, blas=True,
-    ),
-    "emb_semantic_dedup_prod": lambda dd, lt, spark, sf_dir: (
-        lambda sim: sim.semantic_dedup(
-            lt(spark, sf_dir, "embeddings"),
-            threshold=0.4, dim=64, n_cells=16,
-            centroids=sim.ivf_centroids(64, 16), blas=True,
-        )
-    )(
-        __import__(
-            "aurora_mito_etl_spark.operators.similarity", fromlist=["similarity"]
-        )
-    ),
-}
-
 
 def main() -> int:
     sf_dir = (
@@ -256,14 +198,7 @@ def main() -> int:
     # Best of two runs per query: the second run reuses compiled
     # codegen, and the min damps transient scheduler/GC stalls — the
     # number reported is the plan's cost, not the environment's.
-    from aurora_mito_etl_spark.operators import dedup as dd
-    from aurora_mito_etl_spark.sources.catalog import load_table
-
     runnable = {name: QUERIES[name] for name in HEADLINE}
-    for name, make in PROD_VARIANTS.items():
-        runnable[name] = (
-            lambda spark, sf_dir, _make=make: _make(dd, load_table, spark, sf_dir)
-        )
 
     # Noise damping (VERDICT r04 ask #7): the two timing samples are
     # INTERLEAVED across the suite — run every query once, then the
@@ -279,8 +214,8 @@ def main() -> int:
     # in the shared local JVM oscillated up to ~320 MiB mid-suite.
     # Explicitly unpersisting between queries (UNTIMED — after the
     # elapsed reading) measured consistently faster suite passes
-    # (tools/ckpt_hygiene.py A/B: pass totals 62-71s vs 74-104s on the
-    # 16-query checkpoint-heavy tier, two repeats each) and removes a
+    # (r14 A/B: pass totals 62-71s vs 74-104s on the 16-query
+    # checkpoint-heavy tier, two repeats each) and removes a
     # cross-query contamination: one query's leaked storage inflating
     # ANOTHER query's GC time. Timing methodology itself is unchanged
     # (same noop sink, same interleaved best-of-2).

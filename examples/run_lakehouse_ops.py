@@ -99,7 +99,7 @@ def main() -> int:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 13 == 0)
     via_bloom = bl.ngram_contamination_bloom(docs, bench, n=5, m_bits=1 << 20, k=4)
-    via_bcast = dc.ngram_contamination(docs, bench, n=5, portable_hash=True)
+    via_bcast = dc.ngram_contamination(docs, bench, n=5)
     nb = via_bloom.where("contaminated").count()
     nx = via_bcast.where("contaminated").count()
     print(f"contaminated docs: bloom={nb} broadcast={nx}")

@@ -28,7 +28,7 @@ def _as_map(df):
 def test_bloom_matches_exact_contamination(spark):
     docs = _docs(spark)
     bench = docs.filter(BENCH_FILTER)
-    exact = _as_map(dc.ngram_contamination(docs, bench, n=4, portable_hash=True))
+    exact = _as_map(dc.ngram_contamination(docs, bench, n=4))
     bloomed = _as_map(
         bl.ngram_contamination_bloom(docs, bench, n=4, m_bits=1 << 12, k=3)
     )
@@ -40,7 +40,7 @@ def test_tiny_bloom_forces_false_positives_but_same_answer(spark):
     # the Bloom; the exact verify must still produce the exact result.
     docs = _docs(spark)
     bench = docs.filter(BENCH_FILTER)
-    exact = _as_map(dc.ngram_contamination(docs, bench, n=4, portable_hash=True))
+    exact = _as_map(dc.ngram_contamination(docs, bench, n=4))
     bloomed = _as_map(
         bl.ngram_contamination_bloom(docs, bench, n=4, m_bits=64, k=1)
     )

@@ -61,7 +61,7 @@ def test_persisted_corpus_index_round_trip(spark):
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
     new = d.filter(F.col("doc_id") % 2 == 1)
     corpus = d.filter(F.col("doc_id") % 2 == 0)
-    kw = dict(k_shingle=3, num_hashes=16, bands=4, portable_hash=True)
+    kw = dict(k_shingle=3, num_hashes=16, bands=4)
 
     bands_t, sets_t = dd.persist_corpus_index(
         corpus, "text", "doc_id", "t_corpus_idx", num_buckets=8, **kw
@@ -85,8 +85,8 @@ def test_persisted_corpus_index_round_trip(spark):
         # Exchange-free corpus side: probe join on exactly the bucket
         # cols -> the ONLY Exchange in the band join is the new side's.
         probe = dd._minhash_banded(
-            dd._minhash_hashed(new, "text", "doc_id", 3, True),
-            "doc_id", 16, 4, True,
+            dd._minhash_hashed(new, "text", "doc_id", 3),
+            "doc_id", 16, 4,
         )
         joined = probe.join(spark.table(bands_t).hint("merge"), ["band", "bh"])
         plan = _plan(joined)

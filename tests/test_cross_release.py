@@ -16,7 +16,7 @@ BASE = (
     "watches from the warm windowsill and the rain falls outside"
 )
 
-KW = dict(k_shingle=3, num_hashes=16, bands=4, portable_hash=True)
+KW = dict(k_shingle=3, num_hashes=16, bands=4)
 
 
 def test_cross_release_near_dup_reads_only_the_delta(spark, tmp_path):

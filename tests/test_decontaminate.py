@@ -16,10 +16,10 @@ DOCS = [
 BENCH = [(100, "prefix alpha beta gamma delta suffix words here")]
 
 
-def _flags(spark, portable_hash=False):
+def _flags(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     bench = spark.createDataFrame(BENCH, "doc_id long, text string")
-    out = dc.ngram_contamination(docs, bench, n=4, portable_hash=portable_hash)
+    out = dc.ngram_contamination(docs, bench, n=4)
     return {r["doc_id"]: (r["n_hit_ngrams"], r["contaminated"]) for r in out.collect()}
 
 
@@ -30,10 +30,6 @@ def test_contamination_flags(spark):
     assert got[2] == (0, False)
     assert got[4] == (0, False)  # too short for any 4-gram
     assert got[5] == (0, False)  # NULL text is clean, not NULL
-
-
-def test_portable_and_fast_hash_agree(spark):
-    assert _flags(spark, portable_hash=False) == _flags(spark, portable_hash=True)
 
 
 def test_repeated_gram_counts_once(spark):

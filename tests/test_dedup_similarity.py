@@ -1,10 +1,9 @@
 """Dedup tiers and similarity search vs. ground truth.
 
-The approximate operators' registered queries ARE oracle-checked (in
-portable-hash / pinned-plane form); these tests additionally pin
-semantics against exact Python computations on small corpora, the
-xxhash64 production variants, and the Arrow/expression parity
-contracts the oracles rely on.
+The approximate operators' registered queries ARE oracle-checked (md5
+hashes, pinned planes); these tests additionally pin semantics against
+exact Python computations on small corpora and the Arrow/expression
+parity contracts the oracles rely on.
 """
 
 from __future__ import annotations
@@ -114,6 +113,9 @@ def test_minhash_lsh_bucket_cap_drops_mega_cluster(spark):
     # docs are a genuine near-dup pair in their own buckets. With
     # max_bucket_size below the cluster size the mega-bucket's m²/2
     # candidates are skipped while unrelated buckets are untouched.
+    # 8 bands of 2 rows: the J=0.75 pair agrees on 11 of 16 md5
+    # signature slots but on no 4-row band, so 4 bands would miss it
+    # with or without the cap (the LSH S-curve, not the cap).
     boiler = "the same boilerplate text repeated here for every copy"
     rows = [(i, boiler) for i in range(40)] + [
         (100, "a distinct document about modular synthesizers and patch cables"),
@@ -121,18 +123,23 @@ def test_minhash_lsh_bucket_cap_drops_mega_cluster(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     capped = dd.minhash_lsh_pairs(
-        df, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4,
+        df, "text", "doc_id", k_shingle=3, num_hashes=16, bands=8,
         threshold=0.3, max_bucket_size=10,
     )
     got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     assert (100, 101) in got                     # real near-dup survives
     assert not any(a < 40 and b < 40 for a, b in got)  # cluster skipped
-    # default (None) keeps exact semantics: cluster pairs all present
-    full = dd.minhash_lsh_pairs(
-        df, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4, threshold=0.3
-    )
-    n_full = full.filter((F.col("id_a") < 40) & (F.col("id_b") < 40)).count()
-    assert n_full == 40 * 39 // 2
+    # default (None) keeps exact semantics: cluster pairs all present,
+    # and the cap removed nothing outside the cluster
+    full = {
+        (r["id_a"], r["id_b"])
+        for r in dd.minhash_lsh_pairs(
+            df, "text", "doc_id", k_shingle=3, num_hashes=16, bands=8,
+            threshold=0.3,
+        ).collect()
+    }
+    assert sum(a < 40 and b < 40 for a, b in full) == 40 * 39 // 2
+    assert {(a, b) for a, b in full if b >= 40} == got
 
 
 def test_simhash_identical_docs_zero_hamming(spark):
@@ -252,6 +259,24 @@ def test_bucket_arrow_matches_expr_on_testdata(spark):
         ),
     )
     assert both.filter(F.col("b_expr") != F.col("b_arrow")).count() == 0
+
+
+def test_ordered_gram_bit_parity():
+    """The cache-blocked oracle gram must be BIT-identical to the
+    naive dimension-order fold — only the schedule across independent
+    elements may differ, never a per-element summation order."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    # sizes straddling the 256 block edges, incl. dim > block
+    for n, m, dim in [(1, 1, 3), (300, 257, 64), (513, 100, 17)]:
+        A = rng.standard_normal((n, dim))
+        B = rng.standard_normal((m, dim))
+        naive = np.zeros((n, m))
+        for j in range(dim):
+            naive += A[:, j : j + 1] * B[:, j]
+        blocked = sim._ordered_gram(A, B)
+        assert (naive == blocked).all(), (n, m, dim)
 
 
 def test_bucket_arrow_edge_rows(spark):
@@ -1032,8 +1057,7 @@ def test_minhash_est_audit_consistency(spark):
     assert full and full[0]["n_pairs"] >= 1
     assert full[0]["mean_exact"] > 0.5
     pairs = dd.minhash_lsh_pairs(
-        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4,
-        threshold=0.3, portable_hash=True,
+        d, "text", "doc_id", k_shingle=3, num_hashes=16, bands=4, threshold=0.3
     ).collect()
     assert sum(r["n_true"] for r in audit) == len(pairs)
 

@@ -23,12 +23,16 @@ SMOKE_QUERIES = {
     "events_asof_join",         # as-of join
     "docs_clean_text",          # text operators
     "docs_exact_dedup",         # dedup tier
-    "docs_minhash_lsh_pairs",   # LSH tier (portable hash)
+    "docs_minhash_lsh_pairs",   # LSH tier (md5 hashes)
     "emb_lsh_near_dup",         # embedding LSH + Arrow parity
     "emb_ivf_topk",             # pinned-centroid IVF oracle
     "docs_gopher_quality",      # quality battery (round 2)
     "emb_semantic_dedup",       # SemDeDup cells (round 2)
     "flagship_training_corpus", # composed pipeline (round 2)
+    "docs_simhash_pairs",       # SimHash tier
+    "docs_decontaminate",       # n-gram decontamination
+    "docs_duplicate_spans",     # exact substring spans
+    "emb_pq_adc_topk",          # PQ ADC top-k (Arrow encoder)
 }
 
 

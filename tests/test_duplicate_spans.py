@@ -74,16 +74,6 @@ def test_hot_window_cap_drops_boilerplate(spark):
     assert capped == []  # windows in >3 docs dropped from the join
 
 
-def test_portable_and_fast_hash_agree(spark):
-    docs = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "zz alpha beta gamma delta epsilon yy"),
-    ]
-    fast = {tuple(r) for r in _spans(spark, docs)}
-    portable = {tuple(r) for r in _spans(spark, docs, portable_hash=True)}
-    assert fast == portable and fast
-
-
 # ---------------------------------------------------------------------------
 # Exact substring-duplication spans (dedup.exact_substring_spans)
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ Usage: python tools/plan_dump.py <outdir-suffix> [query ...]
        python tools/plan_dump.py after emb_pq_encode
 
 Writes plans/r13/<query>_<suffix>.txt for each query (default: every
-HEADLINE entry + PROD_VARIANTS). Analysis-only — no execution.
+HEADLINE entry). Analysis-only — no execution.
 """
 
 from __future__ import annotations
@@ -25,10 +25,8 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import bench
-    from aurora_mito_etl_spark.operators import dedup as dd
     from aurora_mito_etl_spark.plans.queries import QUERIES
     from aurora_mito_etl_spark.session import get_spark
-    from aurora_mito_etl_spark.sources.catalog import load_table
 
     spark = get_spark(app_name="plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
@@ -40,17 +38,11 @@ def main() -> int:
     )
     outdir.mkdir(parents=True, exist_ok=True)
 
-    runnable = {name: QUERIES[name] for name in bench.HEADLINE}
-    for name, make in bench.PROD_VARIANTS.items():
-        runnable[name] = (
-            lambda spark, sf_dir, _make=make: _make(dd, load_table, spark, sf_dir)
-        )
-
-    for name, fn in runnable.items():
+    for name in bench.HEADLINE:
         if only and name not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
+            df = QUERIES[name](spark, sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

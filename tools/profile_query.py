@@ -26,20 +26,11 @@ def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    import bench
-    from aurora_mito_etl_spark.operators import dedup as dd
     from aurora_mito_etl_spark.plans.queries import QUERIES
     from aurora_mito_etl_spark.session import get_spark
-    from aurora_mito_etl_spark.sources.catalog import load_table
 
     spark = get_spark(app_name="profile-query")
     spark.sparkContext.setLogLevel("ERROR")
-
-    runnable = dict(QUERIES)
-    for name, make in bench.PROD_VARIANTS.items():
-        runnable[name] = (
-            lambda spark, sf_dir, _make=make: _make(dd, load_table, spark, sf_dir)
-        )
 
     # Warm the session the same way bench does.
     QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
@@ -47,7 +38,7 @@ def main() -> int:
     ).save()
 
     for name in names:
-        fn = runnable[name]
+        fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
