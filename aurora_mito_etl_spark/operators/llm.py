@@ -14,6 +14,12 @@ Execution model: ``mapInPandas`` over an iterator of Arrow batches —
 each Python worker holds ONE client (connection reuse), batches rows,
 rate-limits between calls, and never retries through Spark's task
 retry (which would duplicate paid API calls — SURVEY §2.9 I4).
+The result is a lazy local checkpoint, so each input row goes to the
+model once per returned DataFrame, however many actions read it (a
+release that writes two files from one classification pays for it
+once, and both files see the same replies). If an executor holding
+checkpoint blocks is lost, the job reading them fails rather than
+silently re-calling the model.
 Resume is an anti-join against the sink (J4), not worker state.
 """
 
@@ -261,6 +267,15 @@ def classify_documents(
     lines and short replies degrade to ('NO', 'NA') rather than
     dropping the item, so downstream joins never lose PMIDs and the
     run is idempotent under resume.
+
+    Each input row is sent to the model once per returned DataFrame:
+    the first action materializes the replies into a local checkpoint
+    and every later action (counts, filters, each release write)
+    reads those blocks instead of re-running `df`'s lineage and the
+    classifier. A lost checkpoint block (executor loss) fails the
+    reading job; it never silently re-calls the model. When `df`'s
+    plan has exchanges, AQE runs those upstream shuffle/broadcast
+    stages here, at call time, even though the checkpoint is lazy.
     """
     cfg = config or ClassifyConfig()
 
@@ -285,7 +300,7 @@ def classify_documents(
                     out.append(parsed or (pmid, "NO", "NA"))
                 yield pd.DataFrame(out, columns=["pmid", "confidence", "compound"])
 
-    return df.mapInPandas(run, RESULT_SCHEMA)
+    return df.mapInPandas(run, RESULT_SCHEMA).localCheckpoint(eager=False)
 
 
 def classify_documents_resumable(
@@ -298,6 +313,8 @@ def classify_documents_resumable(
 ) -> DataFrame:
     """I2/J4 — at-most-once per PMID: anti-join the already-classified
     sink, then classify only the remainder (reference replays its own
-    output as done-state, run_gpt_filter.py:81-95)."""
+    output as done-state, run_gpt_filter.py:81-95). Like
+    :func:`classify_documents`, each remaining row reaches the model
+    once however many actions read the result."""
     todo = anti_join(df, done.select(pmid_col).distinct(), pmid_col)
     return classify_documents(todo, classifier_factory, pmid_col, text_col, config)

@@ -161,10 +161,16 @@ def resolve_with_cache(
     append to the cache table so the next run joins instead of
     fetching.
     """
+    # The cache-hit frame feeds both the eager fetch of misses and the
+    # resolved join below; checkpoint it so df's lineage and the two
+    # lookup aggregates run once, not once per action. The checkpoint
+    # is lazy, but on an AQE plan the call still runs the upstream
+    # shuffle and broadcast stages (a few jobs here instead of again in
+    # every action that reads `resolved`).
     hit = lookup_join_two_tier(
         df, cache, key=key_col, lookup_key="key", value="value",
         out_col="__cached", default=None,
-    )
+    ).localCheckpoint(eager=False)
     misses = hit.filter(F.col("__cached").isNull()).select(
         F.col(key_col).alias("key")
     )

@@ -236,8 +236,8 @@ def build_release(
       surviving candidate row, no aggregation
       (finalize_realease.py:574-582).
     * all_rows — `processed_all`: the 18-column ranked compound table
-      ordered by (pubmed_references desc, compound asc)
-      (finalize_realease.py:624-628).
+      ordered by (pubmed_references desc, compound asc) in a single
+      partition (finalize_realease.py:624-628).
     """
     clean = clean_candidates(gpt, refs)
     # blacklisting uses the RAW known names (finalize_realease.py:474)
@@ -247,7 +247,12 @@ def build_release(
     enriched = enrich_chemistry(
         resolve_smiles(stats, refs, spark, fetcher_factory), refs, backend_factory
     )
-    all_rows = enriched.select(*RELEASE_COLUMNS).orderBy(
-        F.desc("pubmed_references"), F.asc("compound")
+    # One row per compound: sort in a single partition instead of a
+    # global orderBy, whose range-partition sampling job would run the
+    # chemistry panels' Python UDFs a second time.
+    all_rows = (
+        enriched.select(*RELEASE_COLUMNS)
+        .repartition(1)
+        .sortWithinPartitions(F.desc("pubmed_references"), F.asc("compound"))
     )
     return clean, all_rows

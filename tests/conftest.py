@@ -20,3 +20,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def counting_stub_classifier(spark):
+    """(factory, items): `llm.stub_classifier` wrapped so every item it
+    classifies adds 1 to the `items` accumulator, summed across Python
+    workers — how many times the model would have been paid per row."""
+    from aurora_mito_etl_spark.operators import llm
+
+    items = spark.sparkContext.accumulator(0)
+
+    def make():
+        classify = llm.stub_classifier()
+
+        def counted(batch):
+            items.add(len(batch))
+            return classify(batch)
+
+        return counted
+
+    return make, items

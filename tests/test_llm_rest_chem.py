@@ -37,7 +37,8 @@ def test_parse_result_line_semantics():
     assert llm.parse_result_line("PMID1\tmaybe\tx", "1") is None
 
 
-def test_classify_documents_stub(spark):
+def test_classify_documents_stub(spark, counting_stub_classifier):
+    factory, items = counting_stub_classifier
     df = spark.createDataFrame(
         [
             ("1", "Rotenone inhibits complex I strongly"),
@@ -47,22 +48,32 @@ def test_classify_documents_stub(spark):
         "pmid string, title_abstract string",
     )
     out = llm.classify_documents(
-        df, llm.stub_classifier, config=llm.ClassifyConfig(batch_size=2)
+        df, factory, config=llm.ClassifyConfig(batch_size=2)
     )
     got = {r["pmid"]: (r["confidence"], r["compound"]) for r in out.collect()}
     assert got["1"] == ("YES", "Rotenone")
     assert got["2"][0] == "probablyYES"
     assert got["3"] == ("NO", "NA")
+    # however many actions read the result, the model sees each input
+    # row once (SURVEY §2.9 I4: never re-pay API calls)
+    assert out.count() == 3
+    assert [r["pmid"] for r in out.filter(F.col("confidence") == "NO").collect()] == ["3"]
+    assert items.value == 3
 
 
-def test_classify_resumable_skips_done(spark):
+def test_classify_resumable_skips_done(spark, counting_stub_classifier):
+    factory, items = counting_stub_classifier
     df = spark.createDataFrame(
-        [("1", "a complex i inhibitor"), ("2", "another complex i inhibitor")],
+        [("1", "a complex i inhibitor"), ("2", "another complex i inhibitor"),
+         ("3", "a third complex i inhibitor")],
         "pmid string, title_abstract string",
     )
-    done = spark.createDataFrame([("1",)], "pmid string")
-    out = llm.classify_documents_resumable(df, done, llm.stub_classifier)
+    done = spark.createDataFrame([("1",), ("3",), ("3",)], "pmid string")
+    out = llm.classify_documents_resumable(df, done, factory)
     assert [r["pmid"] for r in out.collect()] == ["2"]
+    assert out.count() == 1
+    assert out.filter(F.col("confidence") == "YES").count() == 1
+    assert items.value == 1
 
 
 def test_classify_retry_then_success(spark):
@@ -124,10 +135,14 @@ def test_resolve_with_cache(spark):
 
 
 def test_resolve_with_cache_fetches_each_miss_once(spark, tmp_path):
-    # Materializing BOTH outputs (resolved + new_cache_rows) must pay
-    # the network exactly once per miss — the unpersisted-RDD regression
-    # ran a separate job per output, double-fetching every miss.
+    # Acting on `resolved` twice and on new_cache_rows once must pay
+    # the network exactly once per distinct miss (the unpersisted-RDD
+    # regression ran a separate fetch job per output) and evaluate df's
+    # lineage, here a Python UDF, once per row: the cache-hit frame is
+    # checkpointed, so the resolved join reads it instead of
+    # recomputing the lookup.
     log = tmp_path / "fetch_calls.log"
+    evaluated = spark.sparkContext.accumulator(0)
 
     def factory():
         def fetch(key):
@@ -137,16 +152,26 @@ def test_resolve_with_cache_fetches_each_miss_once(spark, tmp_path):
 
         return fetch
 
-    df = spark.createDataFrame([("Miss1",), ("Miss2",)], "compound string")
-    cache = spark.createDataFrame([], "key string, value string")
+    @F.udf("string")
+    def seen(name):
+        evaluated.add(1)
+        return name
+
+    df = spark.createDataFrame(
+        [("Miss1",), ("Miss2",), ("Miss1",), ("Metformin",), ("miss2",)], "raw string"
+    ).select(seen("raw").alias("compound"))
+    cache = spark.createDataFrame([("Metformin", "FROM_CACHE")], "key string, value string")
     resolved, new_rows = rest.resolve_with_cache(
         df, cache, factory, key_col="compound", out_col="smiles",
         config=rest.FetchConfig(rate_limit_s=0),
     )
-    assert {r["smiles"] for r in resolved.collect()} == {"V_Miss1", "V_Miss2"}
-    assert new_rows.count() == 2
-    calls = log.read_text().splitlines()
-    assert sorted(calls) == ["Miss1", "Miss2"]  # once per key, total
+    assert resolved.count() == 5
+    assert sorted(r["smiles"] for r in resolved.collect()) == [
+        "FROM_CACHE", "V_Miss1", "V_Miss1", "V_Miss2", "V_miss2",
+    ]
+    assert sorted(r["key"] for r in new_rows.collect()) == ["Miss1", "Miss2", "miss2"]
+    assert sorted(log.read_text().splitlines()) == ["Miss1", "Miss2", "miss2"]
+    assert evaluated.value == 5
 
 
 def test_fetch_missing_values_and_case_fallback(spark):

@@ -160,7 +160,9 @@ def test_process_pubtator(spark, mesh_paths, pubtator_path):
     assert sorted(r["pmid"] for r in pmids.collect()) == ["1001", "1002", "1007"]
 
 
-def test_full_pipeline_end_to_end(spark, pubmed_dir, mesh_paths, pubtator_path):
+def test_full_pipeline_end_to_end(
+    spark, pubmed_dir, mesh_paths, pubtator_path, counting_stub_classifier
+):
     """pubmed → merge_filter → stub LLM → finalize, over fixtures."""
     abstracts = pubmed.process_pubmed(spark, pubmed_dir, year_min=2000)
     _bio, tags = mesh.process_mesh(spark, *mesh_paths)
@@ -175,7 +177,8 @@ def test_full_pipeline_end_to_end(spark, pubmed_dir, mesh_paths, pubtator_path):
     # 1001/1007 pass the final complex-I regex; 1002's NADH phrasing too
     assert kept == {"1001", "1002", "1007"}
 
-    classified = llm.classify_documents(filtered, llm.stub_classifier)
+    classifier, items = counting_stub_classifier
+    classified = llm.classify_documents(filtered, classifier)
     assert validate(classified, "pubmed_gpt").ok
 
     refs = finalize.ReferenceData(
@@ -207,6 +210,9 @@ def test_full_pipeline_end_to_end(spark, pubmed_dir, mesh_paths, pubtator_path):
     assert validate(all_rows.withColumn(
         "pubmed_references", F.col("pubmed_references").cast("int")
     ), "processed_all").ok
+    # both release frames (and the finalize REST step) read one
+    # classification: each filtered PMID reached the model once
+    assert items.value == len(kept)
 
 
 def chem_fake():

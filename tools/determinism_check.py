@@ -9,8 +9,9 @@ Usage: python tools/determinism_check.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.verify_local import canonical  # noqa: E402
 

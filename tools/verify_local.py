@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
@@ -119,7 +120,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from aurora_mito_etl_spark.session import get_spark
 
     spark = get_spark()
